@@ -17,14 +17,15 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import SparkSession, functions as F
 
-from sparrow_ipc_spark.operators.decode_job import decode_blocks
+from sparrow_ipc_spark.operators.decode_job import decode_blocks, dedupe_blocks
 from sparrow_ipc_spark.operators.encode_job import (
     encode_transcripts,
     payload_from_dict_rows,
 )
-from sparrow_ipc_spark.schema import TRANSCRIPTS_SCHEMA
+from sparrow_ipc_spark.schema import BLOCK_SCHEMA, TRANSCRIPTS_SCHEMA
+from sparrow_ipc_spark.sources import manifest as M
 
 
 def compact_blocks(
@@ -46,8 +47,6 @@ def compact_blocks(
     NOTE: the directory swap uses local-filesystem renames — compaction of
     an object-store (s3a/hdfs) table needs a FileSystem-API commit instead;
     every other job in the engine is URI-agnostic."""
-    from sparrow_ipc_spark.sources.manifest import acquire_commit_lease
-
     # the lease is held for the WHOLE compaction — from the first read of
     # block state through the swap — not just around the swap: the staged
     # rewrite and the minted part_offset are snapshots of committed state,
@@ -56,7 +55,7 @@ def compact_blocks(
     # the heartbeat keeps the lease fresh; concurrent appenders simply
     # queue on it (offline maintenance vs. ingest — the queueing is the
     # design, a catalog CAS would force the same serialization).
-    lease = acquire_commit_lease(out_dir)
+    lease = M.acquire_commit_lease(out_dir)
     lease.start_heartbeat()
     try:
         return _compact_under_lease(spark, out_dir, small_rows, target_rows,
@@ -78,7 +77,17 @@ def _compact_under_lease(spark, out_dir, small_rows, target_rows, schema,
     if os.path.isfile(jp):
         with open(jp) as jf:
             job = _json.load(jf)
-    blocks = spark.read.parquet(f"{out_dir}/blocks")
+    # committed state only: unmanifested crash leftovers beside the
+    # committed files would otherwise be re-encoded INTO committed blocks
+    # (and, once rewritten and manifested, never deduped again).  The
+    # shared guarded vacuum deletes them under this lease; where its guard
+    # refuses (legacy rows without ``file``, hand-rewritten dirs) the
+    # manifest still does not map disk 1:1 and the same byte-identical
+    # dedupe decode_dir applies runs before anything is read
+    M.vacuum_orphan_blocks(out_dir)
+    blocks = spark.read.schema(BLOCK_SCHEMA).parquet(f"{out_dir}/blocks")
+    if M.committed_block_files(out_dir) is None:
+        blocks = dedupe_blocks(blocks)
     # scalar aggregates only — collecting per-block metadata rows to the
     # driver would be O(blocks) dicts (~15M at 10^12 turns)
     agg = blocks.agg(
@@ -92,7 +101,7 @@ def _compact_under_lease(spark, out_dir, small_rows, target_rows, schema,
     if n_small <= 1:
         return {"before": before, "after": before, "compacted": 0, "rows_moved": 0}
 
-    dict_rows = [r.asDict() for r in spark.read.parquet(f"{out_dir}/dictionaries").collect()]
+    dict_rows = M.read_dict_rows(out_dir)
     payload = payload_from_dict_rows(dict_rows)
     dec = decode_blocks(spark, small, dict_rows, schema=schema)
     rows_moved = dec.count()
@@ -128,20 +137,17 @@ def _compact_under_lease(spark, out_dir, small_rows, target_rows, schema,
     os.rename(f"{out_dir}/blocks", old)
     os.rename(tmp, f"{out_dir}/blocks")
     shutil.rmtree(old, ignore_errors=True)
-    return _finish_compact(spark, out_dir, before, n_small, rows_moved)
+    return _finish_compact(out_dir, before, n_small, rows_moved)
 
 
-def _finish_compact(spark: SparkSession, out_dir: str, before: int,
-                    n_small: int, rows_moved: int) -> dict:
-
+def _finish_compact(out_dir: str, before: int, n_small: int,
+                    rows_moved: int) -> dict:
     # compaction is a REWRITE: compacted part files are gone, so time travel
     # reaches back only to this new snapshot for the merged rows; untouched
     # parts keep their original snapshot lineage.  The manifest is rebuilt
     # as ONE merged segment — block compaction is inherently O(table), so
     # a full manifest rewrite costs nothing extra here (the per-batch
     # commit path stays O(batch) append-only).
-    from sparrow_ipc_spark.sources import manifest as M
-
     try:
         prev_man = {
             int(r["part_id"]): int(r.get("snapshot", 0) or 0)
@@ -152,7 +158,7 @@ def _finish_compact(spark: SparkSession, out_dir: str, before: int,
     next_snap = (max(prev_man.values()) + 1) if prev_man else 0
     bd = f"{out_dir}/blocks"
     all_files = sorted(f for f in os.listdir(bd) if f.endswith(".parquet"))
-    man_rows = M.manifest_rows_for_new_files(spark, bd, all_files, next_snap)
+    man_rows = M.manifest_rows_for_new_files(bd, all_files, next_snap)
     for r in man_rows:
         # untouched parts keep their original snapshot lineage; only the
         # merged (rewritten) parts get the new snapshot

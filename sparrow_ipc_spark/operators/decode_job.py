@@ -20,7 +20,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from sparrow_ipc_spark.operators import blocks
-from sparrow_ipc_spark.schema import TRANSCRIPTS_SCHEMA
+from sparrow_ipc_spark.schema import BLOCK_SCHEMA, TRANSCRIPTS_SCHEMA
+from sparrow_ipc_spark.sources import manifest as M
 
 
 def load_dict_values(dict_rows: list[dict]) -> dict[int, pa.Array]:
@@ -161,6 +162,34 @@ def decode_blocks(
     return blocks_df.mapInArrow(decode_fn, schema=out_schema)
 
 
+def dedupe_blocks(blocks_df: DataFrame) -> DataFrame:
+    """Crash-idempotence for a block table whose files the manifest does
+    NOT map one-to-one (``manifest.committed_block_files`` is None): a
+    resume that died between the block append and the manifest commit, a
+    replayed micro-batch's leftovers, legacy rows without ``file``, or a
+    hand-rewritten dir.  Blocks are a deterministic function of content,
+    so duplicates are BYTE-IDENTICAL — the key includes body_crc32, which
+    keeps the streaming foreachBatch layout intact (micro-batches
+    legitimately reuse (part_id, batch_seq) with different content).
+    Detection is one Spark job on the cheap metadata columns; the
+    body-shuffling window runs only when duplicates are actually found."""
+    from pyspark.sql import Window
+
+    keys = ("part_id", "batch_seq", "body_crc32", "n_rows")
+    chk = blocks_df.agg(
+        F.count(F.lit(1)).alias("n"),
+        # distinct over a STRUCT, not a column tuple: COUNT(DISTINCT a,b,c)
+        # drops tuples with any NULL field, so a NULL body_crc32 (nullable
+        # in BLOCK_SCHEMA) would spuriously flag duplicates
+        F.count_distinct(F.struct(*keys)).alias("d"),
+    ).first()
+    if int(chk["n"] or 0) == int(chk["d"] or 0):
+        return blocks_df
+    w = Window.partitionBy(*keys).orderBy(F.lit(1))
+    return (blocks_df.withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") == 1).drop("_rn"))
+
+
 def snapshots(spark: SparkSession, out_dir: str) -> DataFrame:
     """Per-snapshot lineage summary (the Iceberg snapshot-log analog):
     which write committed which partitions, with row/byte totals."""
@@ -208,47 +237,34 @@ def decode_dir(
     ``schema=None`` resolves from the directory's ``_schema.json`` sidecar
     when present — restoring per-field custom key/value metadata and exact
     nullability (the reference's custom_metadata contract) — else falls
-    back to the transcript schema."""
+    back to the transcript schema.
+
+    Duplicate blocks left by a crash are collapsed by :func:`dedupe_blocks`
+    only when the committed manifest does not map the on-disk block files
+    one-to-one (``manifest.committed_block_files``); a healthy table skips
+    that check and plans with zero Spark jobs."""
     if schema is None:
         from sparrow_ipc_spark.operators.encode_job import load_schema_sidecar
 
         schema = load_schema_sidecar(out_dir) or TRANSCRIPTS_SCHEMA
-    blocks_df = spark.read.parquet(f"{out_dir}/blocks")
+    # planning runs NO Spark job on a healthy table: the block schema is
+    # the package's own, and dictionaries, time-travel part ids and the
+    # duplicate-check condition are small driver-side metadata reads —
+    # the one job is the decode itself
+    blocks_df = spark.read.schema(BLOCK_SCHEMA).parquet(f"{out_dir}/blocks")
     if snapshot is not None:
-        man = spark.read.parquet(f"{out_dir}/manifest")
-        ids = [int(r["part_id"]) for r in
-               man.where(man["snapshot"] <= int(snapshot)).select("part_id").collect()]
-        blocks_df = blocks_df.where(blocks_df["part_id"].isin(ids))
-    # crash-idempotence: a resume that died between the block append and
-    # the manifest rewrite leaves its re-encoded partitions twice.  Blocks
-    # are a deterministic function of content, so those duplicates are
-    # BYTE-IDENTICAL — the dedupe key includes body_crc32, which keeps the
-    # streaming foreachBatch layout intact (micro-batches legitimately
-    # reuse (part_id, batch_seq) with different content).  Detection runs
-    # on the cheap metadata columns; the body-shuffling window runs ONLY
-    # in the recovery case, never on a healthy directory.
-    from pyspark.sql import Window
+        import pyarrow.compute as pc
 
-    keys = blocks_df.select("part_id", "batch_seq", "body_crc32", "n_rows")
-    # single Spark job (one agg comparing total vs distinct), not two
-    # full-metadata counts — this runs on every healthy read, so its cost
-    # is hot-path latency
-    chk = keys.agg(
-        F.count(F.lit(1)).alias("n"),
-        # distinct over a STRUCT, not a column tuple: COUNT(DISTINCT a,b,c)
-        # drops tuples with any NULL field, so a NULL body_crc32 (nullable
-        # in BLOCK_SCHEMA) would spuriously flag duplicates and run the
-        # recovery window on every healthy read
-        F.count_distinct(F.struct("part_id", "batch_seq", "body_crc32",
-                                  "n_rows")).alias("d"),
-    ).first()
-    if int(chk["n"] or 0) != int(chk["d"] or 0):
-        w = Window.partitionBy("part_id", "batch_seq", "body_crc32",
-                               "n_rows").orderBy(F.lit(1))
-        blocks_df = (blocks_df.withColumn("_rn", F.row_number().over(w))
-                     .where(F.col("_rn") == 1).drop("_rn"))
+        man = M.read_manifest_table(out_dir, ["part_id", "snapshot"])
+        # legacy rows predate the snapshot column: they are snapshot 0
+        live = pc.less_equal(pc.fill_null(man.column("snapshot"), 0),
+                             int(snapshot))
+        ids = sorted(set(pc.filter(man.column("part_id"), live).to_pylist()))
+        blocks_df = blocks_df.where(blocks_df["part_id"].isin(ids))
+    if M.committed_block_files(out_dir) is None:
+        blocks_df = dedupe_blocks(blocks_df)
     blocks_df = prune_blocks(blocks_df, conv_id=conv_id, ts_range_us=ts_range_us)
-    dict_rows = [r.asDict() for r in spark.read.parquet(f"{out_dir}/dictionaries").collect()]
+    dict_rows = M.read_dict_rows(out_dir)
     # an exact conv_id filter needs the conv_id COLUMN for row-level
     # re-evaluation (zone maps prune only at block granularity): decode it
     # internally when the caller's projection excludes it, then drop it

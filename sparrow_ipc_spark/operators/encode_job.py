@@ -662,7 +662,7 @@ def _write_encoded_under_lease(
     # so isdir(manifest) is true even for a brand-new table (which made
     # create-or-append crash reading nonexistent dictionaries)
     from sparrow_ipc_spark.sources.manifest import (
-        has_commits, read_manifest_rows, vacuum_orphan_blocks)
+        has_commits, read_dict_rows, read_manifest_rows, vacuum_orphan_blocks)
 
     committed = has_commits(out_dir)
     prev_committed_rows: list[dict] = []
@@ -682,9 +682,7 @@ def _write_encoded_under_lease(
         }
         this_snapshot = (max(prev_snapshots.values()) + 1) if prev_snapshots else 0
         mode = "append"
-        prev_dicts = [
-            r.asDict() for r in spark.read.parquet(f"{out_dir}/dictionaries").collect()
-        ]
+        prev_dicts = read_dict_rows(out_dir)
         if append:
             part_offset = (max(part_ids) + 1) if part_ids else 0
         else:
@@ -767,7 +765,7 @@ def _write_encoded_under_lease(
     man_rows: list[dict] = []
     if new_files:
         man_rows = M.manifest_rows_for_new_files(
-            spark, blocks_dir, new_files, this_snapshot)
+            blocks_dir, new_files, this_snapshot)
         # a long encode can outlive the lease: a stolen lease must abort
         # HERE, before the segment publishes over a foreign commit —
         # expect_new_snapshot is the directory-level CAS backstop for the

@@ -88,27 +88,17 @@ def _infer_fields(path: str) -> list[tuple[str, str]]:
 
 
 from sparrow_ipc_spark.sources.manifest import (
-    cached_plan,
+    committed_block_files,
     committed_state,
+    manifest_file_map,
     new_files_between,
     read_cursor,
+    read_dict_rows as _load_dict_rows,
     read_manifest_table as _read_manifest_table,
+    row_group_counts,
     write_cursor,
     write_segment,
 )
-
-
-def _load_dict_rows(path: str) -> list[dict]:
-    import pyarrow.parquet as pq
-
-    d = os.path.join(path, "dictionaries")
-    if not os.path.isdir(d):
-        return []
-    rows = []
-    for f in sorted(os.listdir(d)):
-        if f.endswith(".parquet"):
-            rows.extend(pq.read_table(os.path.join(d, f)).to_pylist())
-    return rows
 
 
 @dataclass
@@ -192,30 +182,7 @@ class SparrowIPCReader(DataSourceReader):
     MAX_TASKS_PER_FILE = 256
 
     def _manifest_rg_map(self) -> dict[str, int] | None:
-        """{basename: row-group count} from the committed manifest, or
-        None when any row lacks the mapping.  Column-pruned (3 int/str
-        columns of 11), vectorized, and memoized on the manifest state
-        token — repeat planning over an unchanged table reads nothing."""
-        def build() -> dict[str, int] | None:
-            t = _read_manifest_table(
-                self.path, ["file", "file_row_groups"])
-            if not t.num_rows:
-                return None
-            fc, nc = t.column("file"), t.column("file_row_groups")
-            # nrg == 0 is a legitimately EMPTY committed file, not a
-            # missing count — only absence (None) degrades to footer reads
-            if fc.null_count or nc.null_count:
-                return None
-            out: dict[str, int] = {}
-            for f, n in zip(fc.to_pylist(), nc.to_pylist()):
-                if not f:
-                    return None
-                prev = out.get(f)
-                if prev is None or n > prev:
-                    out[f] = int(n)
-            return out
-
-        return cached_plan(self.path, "rg_map", build)
+        return manifest_file_map(self.path)
 
     def _rg_counts(self) -> list[tuple[str, int]]:
         """[(file path, row-group count)] for every committed block file.
@@ -227,14 +194,8 @@ class SparrowIPCReader(DataSourceReader):
         manifest / legacy rows without file info / manifest-vs-disk
         mismatch after a crash): threaded footer reads."""
         disk = _blocks_files(self.path)
-        by_file = self._manifest_rg_map()
-        if by_file is not None and set(by_file) == {os.path.basename(p) for p in disk}:
-            d = os.path.join(self.path, "blocks")
-            return [(os.path.join(d, f), n) for f, n in sorted(by_file.items())]
-        from sparrow_ipc_spark.sources.manifest import row_group_counts
-
         d = os.path.join(self.path, "blocks")
-        counts = row_group_counts(disk)
+        counts = committed_block_files(self.path) or row_group_counts(disk)
         return [(os.path.join(d, f), n) for f, n in sorted(counts.items())]
 
     def partitions(self) -> list[InputPartition]:

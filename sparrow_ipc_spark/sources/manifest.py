@@ -292,6 +292,66 @@ def read_manifest_rows(path: str) -> list[dict]:
     return rows
 
 
+def manifest_file_map(path: str) -> dict[str, int] | None:
+    """{block-file basename: row-group count} from the committed manifest,
+    or None when the table has no manifest rows or any row lacks the
+    mapping (legacy rows without ``file``).  Column-pruned, vectorized, and
+    memoized on the manifest state token — repeat planning over an
+    unchanged table reads nothing."""
+    def build() -> dict[str, int] | None:
+        t = read_manifest_table(path, ["file", "file_row_groups"])
+        if not t.num_rows:
+            return None
+        fc, nc = t.column("file"), t.column("file_row_groups")
+        # nrg == 0 is a legitimately EMPTY committed file, not a missing
+        # count — only absence (None) degrades to footer reads
+        if fc.null_count or nc.null_count:
+            return None
+        out: dict[str, int] = {}
+        for f, n in zip(fc.to_pylist(), nc.to_pylist()):
+            if not f:
+                return None
+            prev = out.get(f)
+            if prev is None or n > prev:
+                out[f] = int(n)
+        return out
+
+    return cached_plan(path, "rg_map", build)
+
+
+def committed_block_files(path: str) -> dict[str, int] | None:
+    """:func:`manifest_file_map` when it maps the on-disk
+    ``blocks/*.parquet`` files ONE-TO-ONE, else None — the one healthy-table
+    condition every reader trusts (no crash leftovers, replayed attempts or
+    hand-copied files beside the committed ones).  The Data Source reader
+    then plans with zero footer I/O and ``decode_dir`` skips its duplicate
+    check; on None both take their conservative path."""
+    bd = os.path.join(path, "blocks")
+    if not os.path.isdir(bd):
+        return None
+    by_file = manifest_file_map(path)
+    if by_file is None:
+        return None
+    disk = {f for f in os.listdir(bd) if f.endswith(".parquet")}
+    return by_file if set(by_file) == disk else None
+
+
+def read_dict_rows(path: str) -> list[dict]:
+    """Every dictionary row of the table — a driver-side pyarrow read of
+    ``dictionaries/*.parquet`` (a bounded list: the cardinality gate caps
+    global dictionaries); [] when there is no ``dictionaries/`` dir."""
+    import pyarrow.parquet as pq
+
+    d = os.path.join(path, "dictionaries")
+    if not os.path.isdir(d):
+        return []
+    rows: list[dict] = []
+    for f in sorted(os.listdir(d)):
+        if f.endswith(".parquet") and not f.startswith(("_", ".")):
+            rows.extend(pq.read_table(os.path.join(d, f)).to_pylist())
+    return rows
+
+
 def has_commits(path: str) -> bool:
     """True iff the table has any committed manifest state (segment or
     legacy manifest files).  Directory EXISTENCE is not commitment:
@@ -636,7 +696,7 @@ def committed_state(path: str) -> tuple[int, int]:
             int(pc.max(t.column("part_id")).as_py()))
 
 
-def manifest_rows_for_new_files(spark, blocks_dir: str, new_files: list[str],
+def manifest_rows_for_new_files(blocks_dir: str, new_files: list[str],
                                 snapshot: int) -> list[dict]:
     """Manifest rows (with physical file mapping + commit-time row-group
     counts + snapshot) for freshly-written block parquet files — the ONE
@@ -644,24 +704,29 @@ def manifest_rows_for_new_files(spark, blocks_dir: str, new_files: list[str],
     write_encoded, the foreachBatch StreamingEncoder, and compaction
     (three divergent copies of this block caused a replay bug once).
 
-    Driver-side pyarrow reads (round 6): the stamped batch is a bounded
-    list of freshly-written files (O(tasks), never O(table)) holding a
-    handful of block METADATA rows each — a Spark job here cost ~0.4 s of
-    pure scheduling per commit.  The footer reads stay threaded
-    (:func:`row_group_counts`); ``spark`` is kept in the signature for the
-    three call sites."""
+    Driver-side pyarrow reads: the stamped batch is a bounded list of
+    freshly-written files holding a handful of block METADATA rows each (a
+    Spark job here cost ~0.4 s of pure scheduling per commit).  Files are
+    read on a thread pool — compaction passes every block file of the
+    table — and each file's footer is opened once for both its row-group
+    count and its metadata rows."""
     import json as _json
+    from concurrent.futures import ThreadPoolExecutor
 
     import pyarrow.parquet as pq
 
+    def one(fname: str):
+        with pq.ParquetFile(os.path.join(blocks_dir, fname)) as pf:
+            t = pf.read(columns=["part_id", "n_rows", "raw_bytes",
+                                 "enc_bytes", "columns"])
+            return fname, pf.metadata.num_row_groups, t
+
     if not new_files:
         return []
-    rg = row_group_counts([os.path.join(blocks_dir, f) for f in new_files])
+    with ThreadPoolExecutor(min(16, len(new_files))) as ex:
+        read = list(ex.map(one, new_files))
     rows: list[dict] = []
-    for fname in new_files:
-        t = pq.read_table(
-            os.path.join(blocks_dir, fname),
-            columns=["part_id", "n_rows", "raw_bytes", "enc_bytes", "columns"])
+    for fname, n_rg, t in read:
         per_part: dict[int, dict] = {}
         for rec in t.to_pylist():
             d = per_part.setdefault(int(rec["part_id"]), {
@@ -687,7 +752,7 @@ def manifest_rows_for_new_files(spark, blocks_dir: str, new_files: list[str],
                     [{"col": a, "codec": b} for a, b in sorted(d["codecs"])],
                     separators=(",", ":")),
                 "status": "committed",
-                "file_row_groups": rg.get(fname),
+                "file_row_groups": n_rg,
                 "snapshot": int(snapshot),
             })
     return rows

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from sparrow_ipc_spark.operators.decode_job import decode_blocks
 from sparrow_ipc_spark.schema import BLOCK_SCHEMA, TRANSCRIPTS_SCHEMA
+from sparrow_ipc_spark.sources.manifest import read_dict_rows
 
 
 def decode_stream(
@@ -24,6 +25,6 @@ def decode_stream(
     columns: list[str] | None = None,
 ) -> DataFrame:
     """Streaming DataFrame of decoded rows from a (growing) block table."""
-    dict_rows = [r.asDict() for r in spark.read.parquet(f"{out_dir}/dictionaries").collect()]
+    dict_rows = read_dict_rows(out_dir)
     stream = spark.readStream.schema(BLOCK_SCHEMA).parquet(f"{out_dir}/blocks")
     return decode_blocks(spark, stream, dict_rows, schema=schema, columns=columns)

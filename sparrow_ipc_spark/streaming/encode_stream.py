@@ -53,21 +53,17 @@ class StreamingEncoder:
         # version-0 rows for the same dict_id and assign codes that collide
         # with the committed assignment — decode merges rows by version, so
         # post-restart blocks would silently decode to WRONG values.
-        import os
+        from sparrow_ipc_spark.operators.encode_job import payload_from_dict_rows
+        from sparrow_ipc_spark.sources.manifest import read_dict_rows
 
-        if os.path.isdir(f"{out_dir}/dictionaries"):
-            import pyarrow.parquet as pq
-
-            from sparrow_ipc_spark.operators.encode_job import payload_from_dict_rows
-
-            rows = pq.read_table(f"{out_dir}/dictionaries").to_pylist()
-            if rows:
-                committed = payload_from_dict_rows(rows)
-                for c, entry in committed.items():
-                    if c in self._values:
-                        self._values[c] = list(entry["values"])
-                        self._known[c] = set(entry["values"])
-                self._version = max(int(r.get("version", 0) or 0) for r in rows) + 1
+        rows = read_dict_rows(out_dir)
+        if rows:
+            committed = payload_from_dict_rows(rows)
+            for c, entry in committed.items():
+                if c in self._values:
+                    self._values[c] = list(entry["values"])
+                    self._known[c] = set(entry["values"])
+            self._version = max(int(r.get("version", 0) or 0) for r in rows) + 1
 
     def _update_dictionaries(self, df: DataFrame) -> list[dict]:
         """Emit-once protocol: detect new values, emit one delta row per
@@ -186,7 +182,7 @@ class StreamingEncoder:
                            if f.endswith(".parquet") and f not in pre)
         if not new_files:
             return
-        man_rows = M.manifest_rows_for_new_files(self.spark, bd, new_files, snap)
+        man_rows = M.manifest_rows_for_new_files(bd, new_files, snap)
         for r in man_rows:
             # the replay-stable offset must be recorded EXPLICITLY:
             # min(part_id) under-reports it when the lowest hash partition

@@ -111,6 +111,26 @@ def test_resume_crash_between_blocks_and_manifest(spark, small_df, tmp_path_fact
     assert rep["all_columns_identical"], rep
 
 
+def test_decode_dir_lookup_runs_one_spark_job(spark, small_df, tmp_path_factory):
+    """On a healthy table (the manifest maps every block file 1:1) planning
+    is driver-side metadata reads only: a point lookup is ONE Spark job,
+    the decode itself — no schema inference, duplicate check or
+    dictionary collect."""
+    out = str(tmp_path_factory.mktemp("enc_onejob"))
+    write_encoded(spark, small_df, out, n_parts=4)
+    target = small_df.select("conv_id").orderBy("conv_id").limit(1).collect()[0][0]
+    sc = spark.sparkContext
+    group = "decode-dir-one-job"
+    sc.setJobGroup(group, "decode_dir point lookup")
+    try:
+        rows = decode_dir(spark, out, conv_id=target,
+                          columns=["turn_idx", "text"]).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
 def test_decode_dir_conv_filter_without_conv_column(spark, small_df, tmp_path_factory):
     """conv_id point lookup with a projection that EXCLUDES conv_id must
     still row-filter exactly (decode conv_id internally, then drop it)."""
