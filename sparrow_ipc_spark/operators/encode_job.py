@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from sparrow_ipc_spark.codecs.dictionary import dict_id_for
 from sparrow_ipc_spark.operators import blocks
 from sparrow_ipc_spark.schema import BLOCK_SCHEMA, DICTIONARY_SCHEMA
+from sparrow_ipc_spark.sources import manifest as M
+from sparrow_ipc_spark.sources.manifest import require_local_dir  # noqa: F401 (re-exported)
 
 DEFAULT_DICT_COLS = ("role", "tool")
 DEFAULT_SALT_SPAN = 100_000  # turns per salt bucket within one conversation
@@ -297,8 +299,10 @@ def dict_row_for_values(col: str, vals: list[str], version: int, is_delta: bool)
     }
 
 
-def write_dict_rows(out_dir: str, rows: list[dict], append: bool = False) -> None:
-    """Driver-side parquet write of dictionary rows.
+def write_dict_rows(out_dir: str, rows: list[dict]) -> None:
+    """Driver-side parquet write of dictionary rows as one new file under
+    ``dictionaries/`` (committed files are never rewritten; an overwrite
+    clears the directory in its commit transaction first).
 
     Dictionary rows are ALWAYS a bounded driver-side list (the
     cardinality gate guarantees it), so a Spark job to persist them paid
@@ -308,15 +312,12 @@ def write_dict_rows(out_dir: str, rows: list[dict], append: bool = False) -> Non
     schema); an empty table still writes one schema-bearing file so
     ``spark.read.parquet`` on a fresh dir keeps working."""
     import os as _os
-    import shutil as _shutil
     import uuid as _uuid
 
     import pyarrow.parquet as _pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
     dict_dir = _os.path.join(out_dir, "dictionaries")
-    if not append:
-        _shutil.rmtree(dict_dir, ignore_errors=True)
     _os.makedirs(dict_dir, exist_ok=True)
     tbl = pa.Table.from_pylist(rows, schema=to_arrow_schema(DICTIONARY_SCHEMA))
     _pq.write_table(
@@ -487,77 +488,6 @@ def encode_generated(
     return base.mapInArrow(gen_encode, schema=BLOCK_SCHEMA)
 
 
-def manifest_from_blocks(blocks_df: DataFrame, with_file: bool = False) -> DataFrame:
-    """Per-partition lineage + metrics (Footer analog) for resume + audit.
-
-    ``with_file=True`` (for a df read back from ``blocks/`` parquet) also
-    groups by the physical file, so each manifest row records which block
-    file holds the partition — the mapping that lets the data source plan
-    reads without opening any parquet footer."""
-    keys = ["part_id"]
-    if with_file:
-        blocks_df = blocks_df.withColumn("file", F.input_file_name())
-        keys = ["part_id", "file"]
-    return blocks_df.groupBy(*keys).agg(
-        F.count("*").alias("n_blocks"),
-        F.sum("n_rows").alias("n_rows"),
-        F.sum("raw_bytes").alias("raw_bytes"),
-        F.sum("enc_bytes").alias("enc_bytes"),
-        # distinct (column, codec) pairs seen in this partition — a column may
-        # legitimately use different codecs in different blocks (per-chunk
-        # argmin), so this is an array, not a map
-        F.to_json(
-            F.array_sort(
-                F.array_distinct(
-                    F.flatten(
-                        F.collect_list(
-                            F.expr("transform(columns, c -> struct(c.name as col, c.codec as codec))")
-                        )
-                    )
-                )
-            )
-        ).alias("codec_summary"),
-        F.lit("committed").alias("status"),
-    )
-
-
-def require_local_dir(path: str) -> str:
-    """The commit plane (committed-state probe, ``_schema.json`` /
-    ``_job.json`` sidecars, resume markers) uses local-filesystem
-    primitives (``os.path``, ``open``).  On an object-store URI
-    (``s3a://``, ``hdfs://``, ...) those silently report "not committed"
-    and degrade an append/resume into an overwrite that deletes committed
-    blocks — so refuse loudly instead.  Bare paths and ``file:`` URIs are
-    accepted (``file:`` prefix stripped)."""
-    import re as _re
-
-    # only a '<scheme>://' shape is treated as a URI, plus the common
-    # 'file:/abs' form — a RELATIVE local path whose first segment happens
-    # to contain a colon ('data:v2/out') must pass through untouched
-    m = _re.match(r"^([A-Za-z][A-Za-z0-9+.-]*)://(.*)$", path)
-    if m is None:
-        if path.startswith("file:/"):
-            return path[len("file:"):]
-        return path
-    if m.group(1) == "file":
-        rest = m.group(2)
-        # file://AUTHORITY/path: a non-local authority (file://nfs-host/x)
-        # must not be silently mangled into the local path /nfs-host/x
-        if not rest.startswith("/"):
-            authority, _, tail = rest.partition("/")
-            if authority not in ("", "localhost"):
-                raise ValueError(
-                    f"file:// URI with non-local authority '{authority}' — "
-                    "the commit plane is local-filesystem only")
-            rest = tail
-        return "/" + rest.lstrip("/") if rest else "/"
-    raise ValueError(
-        f"write_encoded commit plane is local-filesystem only (got scheme "
-        f"'{m.group(1)}://'): the committed-state probe and sidecar files "
-        "use os.path/open, which would silently degrade append/resume to "
-        "overwrite on an object store. Point out_dir at a local path.")
-
-
 def write_schema_sidecar(out_dir: str, schema) -> None:
     """Persist the FULL Spark schema (incl. per-field custom key/value
     metadata and nullability) as ``_schema.json`` — the Schema-message
@@ -615,186 +545,107 @@ def write_encoded(
     /root/reference/src/dictionary_cache.cpp:20-111,
     dictionary_tracker.cpp:128-169).
 
-    The whole job runs under the table's commit lease (manifest.
-    CommitLease): part-id offsets and skip sets are derived from committed
-    state, so a concurrent writer reading the same state would mint
-    colliding ids — writers serialize on the lease, and a job that loses
-    an expired lease fails loudly BEFORE publishing."""
-    from sparrow_ipc_spark.sources.manifest import acquire_commit_lease
-
-    out_dir = require_local_dir(out_dir)
-    lease = acquire_commit_lease(out_dir)
-    # a multi-minute encode must not lose its lease merely for being slow:
-    # heartbeat renewals keep it fresh, so expiry only ever means a crash
-    lease.start_heartbeat()
-    try:
-        return _write_encoded_under_lease(
-            spark, df, out_dir, n_parts, dict_cols, salt_span, resume,
-            append, clustered, cluster_by, order_by, lease)
-    finally:
-        lease.release()
-
-
-def _write_encoded_under_lease(
-    spark: SparkSession,
-    df: DataFrame,
-    out_dir: str,
-    n_parts: int | None,
-    dict_cols,
-    salt_span: int,
-    resume: bool,
-    append: bool,
-    clustered: bool,
-    cluster_by: str,
-    order_by: str | None,
-    lease,
-) -> dict:
+    Either mode on a table without commits is a plain write.  The whole
+    job runs inside one :class:`manifest.CommitTransaction`: part-id
+    offsets and skip sets are derived from committed state under the
+    table's commit lease, so concurrent writers serialize instead of
+    minting colliding ids, and a job that loses an expired lease fails
+    loudly BEFORE publishing."""
     import json as _json
     import os as _os
-    skip: set[int] = set()
-    mode = "overwrite"
-    part_offset = 0
-    prev_dicts: list[dict] | None = None
-    prev_snapshots: dict[int, int] = {}  # part_id → snapshot that committed it
-    this_snapshot = 0
-    # committed = actual manifest CONTENT, never directory existence —
-    # acquire_commit_lease pre-creates manifest/ to host the lease file,
-    # so isdir(manifest) is true even for a brand-new table (which made
-    # create-or-append crash reading nonexistent dictionaries)
-    from sparrow_ipc_spark.sources.manifest import (
-        has_commits, read_dict_rows, read_manifest_rows, vacuum_orphan_blocks)
 
-    committed = has_commits(out_dir)
+    skip: set[int] = set()
+    part_offset = 0
     prev_committed_rows: list[dict] = []
-    if (resume or append) and committed:
-        # NO broad except here: a readable-manifest-but-broken-dictionaries
-        # dir is corruption and must raise — swallowing it used to fall
-        # back to append mode over a stale skip set and silently duplicate
-        # every committed row
-        prev_committed_rows = read_manifest_rows(out_dir)
-        # crashed prior attempt's unmanifested block files: shared guarded
-        # vacuum (see manifest.vacuum_orphan_blocks for the safety contract)
-        vacuum_orphan_blocks(out_dir, prev_committed_rows)
-        part_ids = {int(r["part_id"]) for r in prev_committed_rows}
-        prev_snapshots = {
-            int(r["part_id"]): int(r.get("snapshot", 0) or 0)
-            for r in prev_committed_rows
-        }
-        this_snapshot = (max(prev_snapshots.values()) + 1) if prev_snapshots else 0
-        mode = "append"
-        prev_dicts = read_dict_rows(out_dir)
-        if append:
-            part_offset = (max(part_ids) + 1) if part_ids else 0
+    with M.CommitTransaction(out_dir, overwrite=None if (resume or append) else True) as tx:
+        out_dir = tx.path
+        if tx.overwrite:
+            dict_rows, payload = build_global_dicts(df, dict_cols)
         else:
-            skip = part_ids
-            # the pruning expression replays pmod(hash(cluster_by, salt),
-            # n_parts) — it MUST use the ORIGINAL run's n_parts AND
-            # salt_span AND cluster/order keys, or committed-part
-            # membership is recomputed against the wrong modulus/key
-            # (silent row loss / duplication).  _job.json records all of
-            # them; a recorded value always wins over the caller's
-            # argument.
-            job_p = _os.path.join(out_dir, "_job.json")
-            if _os.path.isfile(job_p):
-                with open(job_p) as jf:
-                    recorded = _json.load(jf)
-                if recorded.get("n_parts"):
-                    n_parts = int(recorded["n_parts"])
-                if recorded.get("salt_span"):
-                    salt_span = int(recorded["salt_span"])
-                if recorded.get("cluster_by"):
-                    cluster_by = recorded["cluster_by"]
-                if "order_by" in recorded:
-                    order_by = recorded["order_by"]
-            elif n_parts is None:
-                raise ValueError(
-                    "resume=True needs the original n_parts: no _job.json "
-                    "sidecar found (pre-round-3 dir) and no n_parts given")
-    n_parts = n_parts or spark.sparkContext.defaultParallelism  # resolve once
-    if prev_dicts is not None:
-        # committed dictionaries are never rewritten: unseen values append
-        # as delta rows and codes extend the existing assignment, so
-        # already-written blocks' indices stay valid
-        dict_rows, payload = delta_dictionaries(spark, df, prev_dicts, dict_cols)
+            # NO broad except here: a readable-manifest-but-broken-
+            # dictionaries dir is corruption and must raise — swallowing it
+            # used to fall back to append mode over a stale skip set and
+            # silently duplicate every committed row
+            prev_committed_rows = M.read_manifest_rows(out_dir)
+            # crashed prior attempt's unmanifested block files: shared
+            # guarded vacuum (see manifest.vacuum_orphan_blocks)
+            M.vacuum_orphan_blocks(out_dir)
+            if append:
+                part_offset = tx.part_offset
+            else:
+                skip = {int(r["part_id"]) for r in prev_committed_rows}
+                # the pruning expression replays pmod(hash(cluster_by,
+                # salt), n_parts) — it MUST use the ORIGINAL run's n_parts
+                # AND salt_span AND cluster/order keys, or committed-part
+                # membership is recomputed against the wrong modulus/key
+                # (silent row loss / duplication).  _job.json records all
+                # of them; a recorded value always wins over the caller's
+                # argument.
+                job_p = _os.path.join(out_dir, "_job.json")
+                if _os.path.isfile(job_p):
+                    with open(job_p) as jf:
+                        recorded = _json.load(jf)
+                    if recorded.get("n_parts"):
+                        n_parts = int(recorded["n_parts"])
+                    if recorded.get("salt_span"):
+                        salt_span = int(recorded["salt_span"])
+                    if recorded.get("cluster_by"):
+                        cluster_by = recorded["cluster_by"]
+                    if "order_by" in recorded:
+                        order_by = recorded["order_by"]
+                elif n_parts is None:
+                    raise ValueError(
+                        "resume=True needs the original n_parts: no _job.json "
+                        "sidecar found (pre-round-3 dir) and no n_parts given")
+            # committed dictionaries are never rewritten: unseen values
+            # append as delta rows and codes extend the existing
+            # assignment, so already-written blocks' indices stay valid
+            dict_rows, payload = delta_dictionaries(
+                spark, df, M.read_dict_rows(out_dir), dict_cols)
+        n_parts = n_parts or spark.sparkContext.defaultParallelism  # resolve once
         blocks_df, _, _ = encode_transcripts(
             spark, df, n_parts=n_parts, dict_cols=dict_cols, salt_span=salt_span,
             skip_part_ids=skip or None, clustered=clustered, dict_payload=payload,
             part_offset=part_offset, cluster_by=cluster_by, order_by=order_by,
         )
-        if dict_rows:
-            write_dict_rows(out_dir, dict_rows, append=True)
-    else:
-        blocks_df, dict_rows, _ = encode_transcripts(
-            spark, df, n_parts=n_parts, dict_cols=dict_cols, salt_span=salt_span,
-            skip_part_ids=skip or None, clustered=clustered,
-            cluster_by=cluster_by, order_by=order_by,
+        tx.write_dictionaries(dict_rows)
+        blocks_dir = _os.path.join(out_dir, "blocks")
+        pre_files = set(_os.listdir(blocks_dir)) if _os.path.isdir(blocks_dir) else set()
+        # block bodies are ALREADY zstd-compressed by the codec layer; the
+        # session's parquet zstd would re-compress incompressible bytes on
+        # every write AND decompress them on every read — snappy is a
+        # near-passthrough for the body while still covering the small
+        # metadata columns (measured on the bench encode lane)
+        blocks_df.write.mode("append").option("compression", "snappy").parquet(blocks_dir)
+        # O(batch) commit: manifest rows are derived from the NEWLY-written
+        # block files only and published as ONE append-only manifest
+        # segment — the committed history is never re-read or rewritten
+        # (the reference's Footer is write-once, and manifest segments are
+        # the multi-writer Iceberg analog of that).  Previously-committed
+        # rows keep their original snapshot by living in older segments.
+        new_files = sorted(
+            f for f in _os.listdir(blocks_dir)
+            if f.endswith(".parquet") and f not in pre_files
         )
-        write_dict_rows(out_dir, dict_rows, append=False)
-    from sparrow_ipc_spark.sources import manifest as M
-
-    blocks_dir = f"{out_dir}/blocks"
-    pre_files = (set(_os.listdir(blocks_dir))
-                 if mode == "append" and _os.path.isdir(blocks_dir) else set())
-    if mode == "overwrite":
-        # stale segments from a previous table at this path would mix with
-        # the fresh commit — clear them along with the old blocks
-        import shutil as _shutil
-
-        lease.stop_heartbeat()  # no renew may race the clear-recreate window
-        _shutil.rmtree(M.man_dir(out_dir), ignore_errors=True)
-        lease.recreate()  # the clear took the lease file with it
-        lease.start_heartbeat()
-    # block bodies are ALREADY zstd-compressed by the codec layer; the
-    # session's parquet zstd would re-compress incompressible bytes on
-    # every write AND decompress them on every read — snappy is a
-    # near-passthrough for the body while still covering the small
-    # metadata columns (measured on the bench encode lane)
-    blocks_df.write.mode(mode).option("compression", "snappy").parquet(blocks_dir)
-    # O(batch) commit: manifest rows are derived from the NEWLY-written
-    # block files only and published as ONE append-only manifest segment —
-    # the committed history is never re-read or rewritten (at 10^6 parts a
-    # full-manifest rewrite per append is quadratic write amplification;
-    # the reference's Footer (E14) is write-once, and manifest segments
-    # are the multi-writer Iceberg analog of that).  Previously-committed
-    # rows keep their original snapshot by virtue of living in older
-    # segments untouched; fresh rows carry this write's snapshot.
-    new_files = sorted(
-        f for f in _os.listdir(blocks_dir)
-        if f.endswith(".parquet") and f not in pre_files
-    )
-    man_rows: list[dict] = []
-    if new_files:
-        man_rows = M.manifest_rows_for_new_files(
-            blocks_dir, new_files, this_snapshot)
-        # a long encode can outlive the lease: a stolen lease must abort
-        # HERE, before the segment publishes over a foreign commit —
-        # expect_new_snapshot is the directory-level CAS backstop for the
-        # stall window the lease file alone cannot close
-        lease.assert_owned()
-        M.write_segment(out_dir, man_rows, expect_new_snapshot=this_snapshot)
-        all_parts = {int(r["part_id"]) for r in man_rows} | set(prev_snapshots)
-        # re-check: the segment merge inside write_segment can run long,
-        # and a cursor must never publish under a lost lease
-        lease.assert_owned()
-        M.write_cursor(out_dir, this_snapshot, max(all_parts, default=-1))
-    write_schema_sidecar(out_dir, df.schema)
-    if not clustered:
-        # resume pruning must replay pmod(hash, n_parts) with the ORIGINAL
-        # modulus — record it (see the resume branch above)
-        with open(_os.path.join(out_dir, "_job.json"), "w") as jf:
-            _json.dump({"n_parts": int(n_parts), "salt_span": int(salt_span),
-                        "cluster_by": cluster_by, "order_by": order_by}, jf)
+        man_rows = M.manifest_rows_for_new_files(blocks_dir, new_files, tx.snapshot)
+        tx.publish(man_rows, schema=df.schema)
+        if not clustered:
+            # resume pruning must replay pmod(hash, n_parts) with the
+            # ORIGINAL modulus — record it (see the resume branch above)
+            with open(_os.path.join(out_dir, "_job.json"), "w") as jf:
+                _json.dump({"n_parts": int(n_parts), "salt_span": int(salt_span),
+                            "cluster_by": cluster_by, "order_by": order_by}, jf)
     # totals cover the WHOLE committed table: new rows + the previously
     # committed rows (resume/append never rewrite those)
-    prev_tot = {k: sum(int(r[k]) for r in prev_committed_rows)
-                for k in ("n_blocks", "n_rows", "raw_bytes", "enc_bytes")}
+    tot = {k: sum(int(r[k]) for r in prev_committed_rows + man_rows)
+           for k in ("n_blocks", "n_rows", "raw_bytes", "enc_bytes")}
     return {
-        "blocks": prev_tot["n_blocks"] + sum(r["n_blocks"] for r in man_rows),
-        "rows": prev_tot["n_rows"] + sum(r["n_rows"] for r in man_rows),
-        "raw_bytes": prev_tot["raw_bytes"] + sum(r["raw_bytes"] for r in man_rows),
-        "enc_bytes": prev_tot["enc_bytes"] + sum(r["enc_bytes"] for r in man_rows),
+        "blocks": tot["n_blocks"],
+        "rows": tot["n_rows"],
+        "raw_bytes": tot["raw_bytes"],
+        "enc_bytes": tot["enc_bytes"],
         "skipped_parts": len(skip),
-        "snapshot": this_snapshot,
+        "snapshot": tx.snapshot,
     }
 
 

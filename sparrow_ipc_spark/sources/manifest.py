@@ -22,28 +22,41 @@ Layout of ``<table>/manifest/``:
   the directory.  Missing/stale cursor degrades to a full segment read.
 * ``_batch_<id>``     — streaming exactly-once markers (unchanged).
 
+Commit contract: every writer — ``write_encoded``, the Data Source batch
+and stream writers, the foreachBatch ``StreamingEncoder``, compaction —
+commits through ONE :class:`CommitTransaction`, which runs the same steps
+in the same order for all of them: lease, one read of committed state,
+(overwrite only) clear, dictionary rows, the caller's block files,
+manifest segment, cursor, ``_schema.json``.  The writers keep only what
+is really theirs: how block files are produced, the stream writer's
+``_batch_<id>`` markers, ``_job.json`` and compaction's directory swap.
+
 Concurrency contract: ONE COMMITTER at a time, ENFORCED by
-:class:`CommitLease` (``manifest/_commit.lease``): every commit path —
-``write_encoded``, the DataSource batch writer, the foreachBatch
-``StreamingEncoder``, compaction — reads committed state and publishes
-its segment + cursor under the lease, so two live writers serialize
-instead of minting colliding part ids/snapshots.  A crashed holder's
-lease expires and is taken over (one-winner rename); a long job that
-loses its lease fails loudly at ``assert_owned`` before publishing,
+:class:`CommitLease` (``manifest/_commit.lease``), which the transaction
+holds from its state read to its last publish, so two live writers
+serialize instead of minting colliding part ids/snapshots.  A crashed
+holder's lease expires and is taken over (one-winner rename); a long job
+that loses its lease fails loudly at ``assert_owned`` before publishing,
 never after.  The lease is the plain-filesystem stand-in for a catalog
 CAS (Iceberg's commit arbiter) and the one place a real lock service
 plugs in.  Readers are always safe concurrently with the committer
 (segments appear atomically; a half-published batch is exposed at worst,
 never duplicated).
 
-Crash contract: a segment file appears atomically (tmp + ``os.replace``).
-Stream commits use DETERMINISTIC segment names (``seg-batch-<id>.parquet``)
-so a replayed half-crashed commit overwrites its own segment instead of
-appending a duplicate.  Segment compaction (merging > ``SEGMENT_LIMIT``
-files into one) can race a crash into transient duplicate rows for a
-part; readers therefore dedupe on (part_id, file), keeping the
-highest-snapshot row — duplicates are byte-identical re-encodes, so this
-is purely cosmetic.
+Crash contract: a segment file appears atomically (tmp + ``os.replace``),
+and the manifest is the commit record — block files it does not name are
+uncommitted.  An overwrite clears the old manifest, dictionaries and
+blocks BEFORE writing anything new, so a crash mid-overwrite leaves an
+empty table, never old rows read through new dictionary codes.
+Replayable commits (micro-batches) land their block files under
+DETERMINISTIC batch-tagged names and publish a DETERMINISTIC segment
+(``seg-<tag>.parquet``), so a replay of a half-crashed commit overwrites
+its own files and segment instead of appending duplicates, reusing the
+part offset and snapshot the segment recorded.  Segment compaction
+(merging > ``SEGMENT_LIMIT`` files into one) can race a crash into
+transient duplicate rows for a part; readers therefore dedupe on
+(part_id, file), keeping the highest-snapshot row — duplicates are
+byte-identical re-encodes, so this is purely cosmetic.
 """
 
 from __future__ import annotations
@@ -59,6 +72,43 @@ SEGMENT_LIMIT = 64  # max seg files before an automatic merge
 
 def man_dir(path: str) -> str:
     return os.path.join(path, "manifest")
+
+
+def require_local_dir(path: str) -> str:
+    """The commit plane (committed-state probe, ``_schema.json`` /
+    ``_job.json`` sidecars, resume markers) uses local-filesystem
+    primitives (``os.path``, ``open``).  On an object-store URI
+    (``s3a://``, ``hdfs://``, ...) those silently report "not committed"
+    and degrade an append/resume into an overwrite that deletes committed
+    blocks — so refuse loudly instead.  Bare paths and ``file:`` URIs are
+    accepted (``file:`` prefix stripped)."""
+    import re as _re
+
+    # only a '<scheme>://' shape is treated as a URI, plus the common
+    # 'file:/abs' form — a RELATIVE local path whose first segment happens
+    # to contain a colon ('data:v2/out') must pass through untouched
+    m = _re.match(r"^([A-Za-z][A-Za-z0-9+.-]*)://(.*)$", path)
+    if m is None:
+        if path.startswith("file:/"):
+            return path[len("file:"):]
+        return path
+    if m.group(1) == "file":
+        rest = m.group(2)
+        # file://AUTHORITY/path: a non-local authority (file://nfs-host/x)
+        # must not be silently mangled into the local path /nfs-host/x
+        if not rest.startswith("/"):
+            authority, _, tail = rest.partition("/")
+            if authority not in ("", "localhost"):
+                raise ValueError(
+                    f"file:// URI with non-local authority '{authority}' — "
+                    "the commit plane is local-filesystem only")
+            rest = tail
+        return "/" + rest.lstrip("/") if rest else "/"
+    raise ValueError(
+        f"write_encoded commit plane is local-filesystem only (got scheme "
+        f"'{m.group(1)}://'): the committed-state probe and sidecar files "
+        "use os.path/open, which would silently degrade append/resume to "
+        "overwrite on an object store. Point out_dir at a local path.")
 
 
 def manifest_pa_schema():
@@ -360,8 +410,7 @@ def has_commits(path: str) -> bool:
     return bool(_manifest_read_dir(path)[1])
 
 
-def vacuum_orphan_blocks(path: str, committed_rows: list[dict] | None = None,
-                         blocks_dir: str | None = None) -> int:
+def vacuum_orphan_blocks(path: str) -> int:
     """Delete unmanifested parquet files under ``blocks/`` (crashed or
     replayed write attempts).  The manifest is the commit record, so an
     unmanifested file is uncommitted garbage — left in place it would
@@ -374,28 +423,21 @@ def vacuum_orphan_blocks(path: str, committed_rows: list[dict] | None = None,
     committed file map is a subset of disk.  A hand-rewritten or
     foreign-tool dir has stale file names, and deleting by a stale map
     would destroy committed data.  Returns the number of files removed."""
-    if committed_rows is not None:
-        if not committed_rows or not all(r.get("file") for r in committed_rows):
-            return 0
-        committed_files = {r["file"] for r in committed_rows}
-    else:
-        # column-pruned: vacuum only needs the file map, never the
-        # full-width O(parts) dict view
-        fc = read_manifest_table(path, ["file"]).column("file")
-        if not len(fc) or fc.null_count:
-            return 0
-        committed_files = set(fc.to_pylist())
-    bd = blocks_dir or os.path.join(path, "blocks")
+    # column-pruned: vacuum only needs the file map, never the full-width
+    # O(parts) dict view
+    fc = read_manifest_table(path, ["file"]).column("file")
+    if not len(fc) or fc.null_count:
+        return 0
+    committed_files = set(fc.to_pylist())
+    bd = os.path.join(path, "blocks")
     if not os.path.isdir(bd):
         return 0
     disk = {f for f in os.listdir(bd) if f.endswith(".parquet")}
     if not committed_files <= disk:
         return 0
-    n = 0
     for f in disk - committed_files:
         os.remove(os.path.join(bd, f))
-        n += 1
-    return n
+    return len(disk - committed_files)
 
 
 def segment_snapshot_range(seg_path: str) -> tuple[int, int] | None:
@@ -666,9 +708,10 @@ def write_segment(path: str, man_rows: list[dict], seg_name: str | None = None,
 
 def rewrite_manifest(path: str, man_rows: list[dict]) -> None:
     """Full manifest REWRITE (block compaction only): replaces every
-    segment with one merged segment describing the post-rewrite table."""
+    segment with one merged segment describing the post-rewrite table.
+    Like :func:`write_segment` it leaves NO cursor; the caller publishes
+    one (:meth:`CommitTransaction.publish` does)."""
     d = man_dir(path)
-    os.makedirs(d, exist_ok=True)
     seg = write_segment(path, man_rows, f"seg-rewrite-{uuid.uuid4().hex[:8]}.parquet",
                         merge_limit=10**9)
     # delete everything the new segment supersedes (including any
@@ -676,9 +719,6 @@ def rewrite_manifest(path: str, man_rows: list[dict]) -> None:
     for f in _segment_files(d) + _legacy_files(d):
         if f != seg:
             os.remove(os.path.join(d, f))
-    snap = max((int(r.get("snapshot") or 0) for r in man_rows), default=0)
-    maxp = max((int(r["part_id"]) for r in man_rows), default=-1)
-    write_cursor(path, snap, maxp)
 
 
 def committed_state(path: str) -> tuple[int, int]:
@@ -696,21 +736,51 @@ def committed_state(path: str) -> tuple[int, int]:
             int(pc.max(t.column("part_id")).as_py()))
 
 
+def manifest_row(part_id: int, file: str, file_row_groups: int, snapshot: int,
+                 n_blocks: int, n_rows: int, raw_bytes: int, enc_bytes: int,
+                 codecs) -> dict:
+    """One committed manifest row — the ONE place a row's shape and its
+    ``codec_summary`` are formatted, whether the per-part totals come from
+    reading block files back (:func:`manifest_rows_for_new_files`) or from
+    Data Source task commit messages.  ``codecs`` holds (column, codec)
+    pairs; a column may legitimately use different codecs in different
+    blocks, so the summary lists every distinct pair, sorted."""
+    return {
+        "part_id": int(part_id),
+        "file": file,
+        "n_blocks": int(n_blocks),
+        "n_rows": int(n_rows),
+        "raw_bytes": int(raw_bytes),
+        "enc_bytes": int(enc_bytes),
+        "codec_summary": json.dumps(
+            [{"col": a, "codec": b} for a, b in sorted(set(codecs))],
+            separators=(",", ":")),
+        "status": "committed",
+        "file_row_groups": int(file_row_groups),
+        "snapshot": int(snapshot),
+    }
+
+
 def manifest_rows_for_new_files(blocks_dir: str, new_files: list[str],
                                 snapshot: int) -> list[dict]:
     """Manifest rows (with physical file mapping + commit-time row-group
-    counts + snapshot) for freshly-written block parquet files — the ONE
-    implementation of the O(batch) commit stamping shared by
-    write_encoded, the foreachBatch StreamingEncoder, and compaction
-    (three divergent copies of this block caused a replay bug once).
+    counts + snapshot) for freshly-written block parquet files — the
+    O(batch) commit stamping of every writer that produces its block files
+    with Spark (write_encoded, the foreachBatch StreamingEncoder,
+    compaction).
 
     Driver-side pyarrow reads: the stamped batch is a bounded list of
     freshly-written files holding a handful of block METADATA rows each (a
     Spark job here cost ~0.4 s of pure scheduling per commit).  Files are
     read on a thread pool — compaction passes every block file of the
     table — and each file's footer is opened once for both its row-group
-    count and its metadata rows."""
-    import json as _json
+    count and its metadata rows.
+
+    A new file holding no block rows (Spark writes one for an empty
+    partition 0, to carry the schema) names no part, so no manifest row
+    can commit it: it is deleted here, or it would keep the manifest from
+    mapping disk one-to-one and send every read down the duplicate-check
+    path."""
     from concurrent.futures import ThreadPoolExecutor
 
     import pyarrow.parquet as pq
@@ -727,6 +797,9 @@ def manifest_rows_for_new_files(blocks_dir: str, new_files: list[str],
         read = list(ex.map(one, new_files))
     rows: list[dict] = []
     for fname, n_rg, t in read:
+        if not t.num_rows:
+            os.remove(os.path.join(blocks_dir, fname))
+            continue
         per_part: dict[int, dict] = {}
         for rec in t.to_pylist():
             d = per_part.setdefault(int(rec["part_id"]), {
@@ -737,24 +810,8 @@ def manifest_rows_for_new_files(blocks_dir: str, new_files: list[str],
             d["raw_bytes"] += int(rec["raw_bytes"])
             d["enc_bytes"] += int(rec["enc_bytes"])
             d["codecs"].update((c["name"], c["codec"]) for c in rec["columns"])
-        for part_id in sorted(per_part):
-            d = per_part[part_id]
-            rows.append({
-                "part_id": part_id,
-                "file": fname,
-                "n_blocks": d["n_blocks"],
-                "n_rows": d["n_rows"],
-                "raw_bytes": d["raw_bytes"],
-                "enc_bytes": d["enc_bytes"],
-                # distinct (column, codec) pairs, sorted — a column may
-                # legitimately use different codecs in different blocks
-                "codec_summary": _json.dumps(
-                    [{"col": a, "codec": b} for a, b in sorted(d["codecs"])],
-                    separators=(",", ":")),
-                "status": "committed",
-                "file_row_groups": n_rg,
-                "snapshot": int(snapshot),
-            })
+        rows.extend(manifest_row(part_id, fname, n_rg, snapshot, **per_part[part_id])
+                    for part_id in sorted(per_part))
     return rows
 
 
@@ -1093,6 +1150,155 @@ def acquire_commit_lease(path: str, lease_s: float = 120.0,
         with os.fdopen(fd, "w") as f:
             json.dump(lease._payload(), f)
         return lease
+
+
+class CommitTransaction:
+    """The ONE commit protocol of every table writer (the reference's
+    dictionaries → record batches → write-once footer order,
+    stream_file_serializer.cpp:34-129).  The steps always run in this
+    order:
+
+    1. :func:`require_local_dir` (constructor);
+    2. commit lease plus heartbeat (:meth:`begin`);
+    3. ONE read of committed state — :func:`committed_state`, plus
+       :func:`segment_commit_info` when a deterministic ``seg_name`` is
+       given (a replay reuses the part offset and snapshot it recorded);
+    4. overwrite only: clear ``manifest/``, ``dictionaries/`` and
+       ``blocks/`` FIRST, then recreate the lease the clear took with it;
+    5. dictionary rows, appended as one new file (4 and 5 are
+       :meth:`write_dictionaries`);
+    6. the caller lands its block files — directly (Spark writes into
+       ``blocks/``), through :meth:`land` (staged files, deterministic
+       names for replayable commits) or by compaction's directory swap;
+    7. the caller builds manifest rows (:func:`manifest_row`,
+       :func:`manifest_rows_for_new_files`);
+    8. ``assert_owned`` → :func:`write_segment` (append CAS), or the
+       compaction :func:`rewrite_manifest`;
+    9. ``assert_owned`` → :func:`write_cursor`;
+    10. ``_schema.json`` (8-10 are :meth:`publish`).
+
+    The lease is held from step 2 through :meth:`close` (also a context
+    manager).  ``overwrite=None`` is create-or-append: overwrite iff the
+    table has no commits yet, decided under the lease.  The Data Source
+    batch writer holds one transaction from its driver-side init (part
+    offsets are minted from step 3) to commit, across a pickle round trip
+    — the lease pickles as its owner token."""
+
+    def __init__(self, path: str, overwrite: bool | None = False,
+                 seg_name: str | None = None):
+        self.path = require_local_dir(path)
+        self.overwrite = overwrite
+        self.seg_name = seg_name
+        self.lease: CommitLease | None = None
+
+    def begin(self) -> "CommitTransaction":
+        self.lease = acquire_commit_lease(self.path)
+        # a multi-minute job must not lose its lease merely for being
+        # slow: heartbeat renewals keep it fresh, so expiry only ever
+        # means a crash
+        self.lease.start_heartbeat()
+        try:
+            # committed = manifest CONTENT, never directory existence: the
+            # lease itself pre-creates manifest/
+            if self.overwrite is None:
+                self.overwrite = not has_commits(self.path)
+            snap, max_part = (-1, -1) if self.overwrite else committed_state(self.path)
+            off, replay_snap = (segment_commit_info(self.path, self.seg_name)
+                                if self.seg_name else (None, None))
+        except BaseException:
+            self.lease.release()
+            raise
+        self.part_offset = max_part + 1 if off is None else off
+        self.snapshot = snap + 1 if replay_snap is None else replay_snap
+        return self
+
+    def assert_held(self) -> None:
+        """Raise :class:`CommitLeaseError` unless this transaction still
+        holds the table — call before a destructive step the transaction
+        does not run itself (compaction's directory swap)."""
+        self.lease.assert_owned()
+
+    def write_dictionaries(self, rows: list[dict]) -> None:
+        """Steps 4-5.  Overwrite clears the old table FIRST: were it
+        cleared after the new dictionaries landed, a crash in between
+        would decode the old blocks through the new codes — silently wrong
+        rows.  Appends add ``rows`` as a new file; a table without
+        ``dictionaries/`` gets one schema-bearing (possibly empty) file,
+        so ``spark.read.parquet`` on it always sees the one
+        DICTIONARY_SCHEMA."""
+        import shutil
+
+        from sparrow_ipc_spark.operators import encode_job
+
+        if self.overwrite:
+            self.lease.stop_heartbeat()  # no renew may race the clear
+            for sub in ("manifest", "dictionaries", "blocks"):
+                shutil.rmtree(os.path.join(self.path, sub), ignore_errors=True)
+            self.lease.recreate()  # the clear took the lease file with it
+            self.lease.start_heartbeat()
+        if rows or not os.path.isdir(os.path.join(self.path, "dictionaries")):
+            encode_job.write_dict_rows(self.path, rows)
+
+    def land(self, staging: str, files: list[str], tag: str | None = None) -> list[str]:
+        """Step 6 for staged writers: move ``files`` (names under
+        ``staging``) into ``blocks/`` and drop the staging dir; returns
+        the published names.  With a batch ``tag`` (replayable commits)
+        the i-th file publishes as ``<tag>-<i>.parquet`` — callers pass
+        ``files`` in a deterministic order — and every other file of that
+        tag is removed, so a replay of a crashed commit overwrites its own
+        files (even when the crashed attempt had more of them) instead of
+        leaving duplicates beside them."""
+        import shutil
+
+        self.assert_held()
+        bd = os.path.join(self.path, "blocks")
+        os.makedirs(bd, exist_ok=True)
+        names = list(files)
+        if tag is not None:
+            names = [f"{tag}-{i:05d}.parquet" for i in range(len(files))]
+            for f in set(os.listdir(bd)) - set(names):
+                if f.startswith(f"{tag}-") and f.endswith(".parquet"):
+                    os.remove(os.path.join(bd, f))
+        for f, name in zip(files, names):
+            os.replace(os.path.join(staging, f), os.path.join(bd, name))
+        shutil.rmtree(staging, ignore_errors=True)
+        return names
+
+    def publish(self, man_rows: list[dict], schema=None,
+                rewrite: bool = False) -> None:
+        """Steps 8-10: the segment (or compaction's full ``rewrite``), the
+        cursor, and the ``schema`` sidecar.  No rows, no segment."""
+        from sparrow_ipc_spark.operators import encode_job
+
+        if man_rows:
+            # a long job can outlive the lease: a stolen lease must abort
+            # HERE, before publishing over a foreign commit —
+            # expect_new_snapshot is the directory-level CAS backstop for
+            # the stall window the lease file alone cannot close (skipped
+            # when a replay re-publishes its deterministic segment)
+            self.lease.assert_owned()
+            if rewrite:
+                rewrite_manifest(self.path, man_rows)
+            else:
+                write_segment(self.path, man_rows, self.seg_name,
+                              expect_new_snapshot=self.snapshot)
+            # re-check: the segment merge can run long, and a cursor must
+            # never publish under a lost lease.  write_cursor reconciles
+            # against the directory, so a replay of an old micro-batch
+            # still publishes a cursor covering every commit
+            self.lease.assert_owned()
+            write_cursor(self.path, self.snapshot,
+                         max(int(r["part_id"]) for r in man_rows))
+        if schema is not None:
+            encode_job.write_schema_sidecar(self.path, schema)
+
+    def close(self) -> None:
+        self.lease.release()
+
+    __enter__ = begin
+
+    def __exit__(self, *exc) -> None:
+        self.close()
 
 
 def row_group_counts(paths: list[str], max_workers: int = 16) -> dict[str, int]:

@@ -34,7 +34,7 @@ class StreamingEncoder:
 
     def __init__(self, spark: SparkSession, out_dir: str,
                  dict_cols=DEFAULT_DICT_COLS, n_parts: int | None = None):
-        from sparrow_ipc_spark.operators.encode_job import require_local_dir
+        from sparrow_ipc_spark.sources.manifest import require_local_dir
 
         self.spark = spark
         self.out_dir = out_dir = require_local_dir(out_dir)
@@ -129,84 +129,42 @@ class StreamingEncoder:
         }
 
     def process_batch(self, df: DataFrame, batch_id: int) -> None:
-        from sparrow_ipc_spark.sources.manifest import acquire_commit_lease
+        """Commit one micro-batch through the table's commit transaction.
 
-        # each micro-batch commits under the table lease: part offsets and
-        # snapshots derive from committed state, so a concurrent batch
-        # writer on the same table serializes instead of colliding
-        lease = acquire_commit_lease(self.out_dir)
-        lease.start_heartbeat()  # a big replay batch can outlive the lease
-        try:
-            self._process_batch_under_lease(df, batch_id, lease)
-        finally:
-            lease.release()
-
-    def _process_batch_under_lease(self, df: DataFrame, batch_id: int,
-                                   lease) -> None:
-        dict_rows = self._update_dictionaries(df)
-        if dict_rows:
-            # dictionaries land before the blocks that reference them
-            # (driver-side write: dictionary rows are a bounded list and a
-            # Spark job here cost ~0.4 s of scheduling per micro-batch)
-            from sparrow_ipc_spark.operators.encode_job import write_dict_rows
-
-            write_dict_rows(self.out_dir, dict_rows, append=True)
+        Part ids are offset past the committed table so micro-batches never
+        collide — without this, snapshot time travel over a streamed dir
+        would resolve a part id to EVERY batch's rows.  REPLAY STABILITY: a
+        foreachBatch replay (a crash anywhere in this commit, before the
+        checkpoint recorded the batch) reuses the part offset and snapshot
+        its deterministic segment recorded, and lands its block files under
+        the batch's deterministic names — the replay overwrites the crashed
+        attempt's files instead of adding a second copy of every row."""
         from sparrow_ipc_spark.sources import manifest as M
 
-        # part ids are offset past the committed table so micro-batches
-        # never collide — without this, snapshot time travel over a
-        # streamed dir would resolve a part id to EVERY batch's rows.
-        # REPLAY STABILITY: a foreachBatch replay (crash after this
-        # batch's commit but before the checkpoint recorded it) must reuse
-        # the crashed attempt's part offset AND snapshot — both read back
-        # from its own deterministic segment.  With the same part ids the
-        # re-encode is byte-identical and decode_dir's
-        # (part_id, batch_seq, crc) dedupe collapses the leftover files;
-        # a fresh offset would decode every row of the batch twice.
-        seg_name = f"seg-fb-{batch_id:08d}.parquet"
-        prev_snap, prev_max = M.committed_state(self.out_dir)
-        replay_off, replay_snap = M.segment_commit_info(self.out_dir, seg_name)
-        part_offset = replay_off if replay_off is not None else prev_max + 1
-        snap = replay_snap if replay_snap is not None else prev_snap + 1
-        blocks_df, _, _ = encode_transcripts(
-            self.spark, df, n_parts=self.n_parts, dict_cols=self.dict_cols,
-            dict_payload=self.payload(), part_offset=part_offset,
-        )
-        bd = f"{self.out_dir}/blocks"
-        pre = set(os.listdir(bd)) if os.path.isdir(bd) else set()
-        blocks_df.write.mode("append").option("compression", "snappy").parquet(bd)  # bodies pre-zstd'd
-        # O(batch) manifest-segment commit, same plane as write_encoded:
-        # streamed dirs get footer-free DS planning, O(1) cursor offsets
-        # and snapshot lineage.
-        new_files = sorted(f for f in os.listdir(bd)
-                           if f.endswith(".parquet") and f not in pre)
-        if not new_files:
-            return
-        man_rows = M.manifest_rows_for_new_files(bd, new_files, snap)
-        for r in man_rows:
-            # the replay-stable offset must be recorded EXPLICITLY:
-            # min(part_id) under-reports it when the lowest hash partition
-            # of this batch encoded zero rows
-            r["part_offset"] = part_offset
-        lease.assert_owned()  # a stolen lease must abort before publishing
-        # directory-level CAS; auto-skipped on replay (segment exists)
-        M.write_segment(self.out_dir, man_rows, seg_name,
-                        expect_new_snapshot=snap)
-        new_max = max((int(r["part_id"]) for r in man_rows), default=prev_max)
-        lease.assert_owned()  # merge inside write_segment can run long
-        M.write_cursor(self.out_dir, max(prev_snap, snap), max(prev_max, new_max))
-        if replay_off is not None:
-            # REPLAY VACUUM: the crashed attempt's uuid-named block files
-            # are now unmanifested (this replay's segment overwrote the
-            # crashed segment with the fresh file names Spark minted).
-            # decode_dir collapses them via its (part_id, batch_seq, crc)
-            # dedupe, but the batch DataSource reader decodes every file on
-            # disk — left in place they'd permanently double the batch's
-            # rows there AND fail the manifest-vs-disk planning check.
-            # Shared guarded vacuum (manifest.vacuum_orphan_blocks): only
-            # deletes when every committed row maps a file and the
-            # committed map is consistent with disk.
-            M.vacuum_orphan_blocks(self.out_dir)
+        tag = f"fb-{batch_id:08d}"
+        with M.CommitTransaction(self.out_dir, seg_name=f"seg-{tag}.parquet") as tx:
+            # dictionaries land before the blocks that reference them
+            tx.write_dictionaries(self._update_dictionaries(df))
+            blocks_df, _, _ = encode_transcripts(
+                self.spark, df, n_parts=self.n_parts, dict_cols=self.dict_cols,
+                dict_payload=self.payload(), part_offset=tx.part_offset,
+            )
+            staging = os.path.join(self.out_dir, f"_staging_{tag}")
+            (blocks_df.write.mode("overwrite").option("compression", "snappy")  # bodies pre-zstd'd
+             .parquet(staging))
+            # Spark names its part files by partition index: sorted, they
+            # are a deterministic order for the batch-tagged names
+            staged = sorted(f for f in os.listdir(staging)
+                            if f.endswith(".parquet") and not f.startswith((".", "_")))
+            bd = os.path.join(self.out_dir, "blocks")
+            man_rows = M.manifest_rows_for_new_files(
+                bd, tx.land(staging, staged, tag=tag), tx.snapshot)
+            for r in man_rows:
+                # the replay-stable offset must be recorded EXPLICITLY:
+                # min(part_id) under-reports it when the lowest hash
+                # partition of this batch encoded zero rows
+                r["part_offset"] = tx.part_offset
+            tx.publish(man_rows, schema=df.schema)
 
 
 def encode_stream(spark: SparkSession, stream_df: DataFrame, out_dir: str,

@@ -10,7 +10,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from sparrow_ipc_spark.operators.decode_job import decode_dir
-from sparrow_ipc_spark.operators.encode_job import manifest_from_blocks, write_encoded
+from sparrow_ipc_spark.operators.encode_job import write_encoded
 from sparrow_ipc_spark.operators.verify import roundtrip_report
 from sparrow_ipc_spark.sources.transcripts import transcripts_df
 
